@@ -158,7 +158,7 @@ def worker(args) -> int:
         _emit("ready", {})
         if args.child == "probe":
             return 0
-        # the driver's go: the set-up probes have exited, so the warm-up's
+        # the parent's go: the set-up probes have exited, so the warm-up's
         # JIT compilation does not compete with them for the CPU
         sys.stdin.readline()
         for op in ops[1:] + ops * WARMUP_PASSES[args.workload]:
@@ -230,7 +230,7 @@ def _stop_spark(spark) -> None:
 
 
 # ---------------------------------------------------------------------------
-# driver process: inputs, set-up samples, report
+# parent process: inputs, set-up samples, report
 # ---------------------------------------------------------------------------
 
 class _Worker:
@@ -286,7 +286,7 @@ def _worker_cmd(args, role: str, work: str) -> list[str]:
             "--seconds", str(args.seconds), "--trace", str(args.trace), "--work", work]
 
 
-def drive(args) -> int:
+def parent(args) -> int:
     t_begin = time.perf_counter()
     deadline = t_begin + DEADLINE_S
     if not os.path.isfile(os.path.join(ROOT, "hiero_spark", "session.py")):
@@ -294,9 +294,9 @@ def drive(args) -> int:
         return 2
     from perfbench import datagen, workloads
 
-    parent = os.path.join(ROOT, ".perfbench_work")
-    os.makedirs(parent, exist_ok=True)
-    work = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=parent)
+    work_root = os.path.join(ROOT, ".perfbench_work")
+    os.makedirs(work_root, exist_ok=True)
+    work = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=work_root)
     workers: list[_Worker] = []
     try:
         data = datagen.generate(os.path.join(work, "data"), args.seed, workloads.INGEST_COMMITS)
@@ -331,7 +331,7 @@ def drive(args) -> int:
             w.reap(time.perf_counter() + 10)
         shutil.rmtree(work, ignore_errors=True)
         try:
-            os.rmdir(parent)
+            os.rmdir(work_root)
         except OSError:
             pass
 
@@ -362,7 +362,7 @@ def main() -> int:
     ap.add_argument("--child", choices=("probe", "measure"), help=argparse.SUPPRESS)
     ap.add_argument("--work", help=argparse.SUPPRESS)
     args = ap.parse_args()
-    return worker(args) if args.child else drive(args)
+    return worker(args) if args.child else parent(args)
 
 
 if __name__ == "__main__":
