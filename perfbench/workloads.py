@@ -67,10 +67,8 @@ def canon(v):
         return v.isoformat()
     if isinstance(v, dict):
         return tuple((k, canon(v[k])) for k in sorted(v))
-    if isinstance(v, (list, tuple, np.ndarray)):
+    if isinstance(v, (list, tuple, np.ndarray)):  # Spark Rows are tuples
         return tuple(canon(x) for x in v)
-    if hasattr(v, "asDict"):
-        return canon(v.asDict())
     return str(v)
 
 
